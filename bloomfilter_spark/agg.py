@@ -63,17 +63,6 @@ def hash_col(cols, seed: int = DEFAULT_SEED) -> Column:
     return F.xxhash64(F.lit(seed).cast("long"), *_cols(cols))
 
 
-def prehash(df: DataFrame, col_map: dict[str, list], seed: int = DEFAULT_SEED) -> DataFrame:
-    """Hash-once projection: one xxhash64 column per sketch input, computed
-    in a single scan. Persist the result and feed it to build_sketch with
-    prehashed=True — at 100 TB this reads the (wide, string-heavy) source
-    exactly once for the whole sketch family instead of once per sketch.
-
-    col_map: {out_name: [source cols...]}."""
-    out = [hash_col(_cols(cs), seed).alias(name) for name, cs in col_map.items()]
-    return df.select(*out)
-
-
 def prepare_input(df: DataFrame, cols, proto: Sketch, seed: int = DEFAULT_SEED,
                   weight_col=None, prehashed: bool = False) -> DataFrame:
     """Project df down to the single column a sketch kernel consumes.
@@ -256,13 +245,6 @@ def build_sketch(df: DataFrame, cols, factory: Callable[[], Sketch],
     final = factory()
     final.merge(type(final).from_bytes(bytes(row[0]["sketch"])))
     return final
-
-
-def merge_sketches(sketches: Sequence[Sketch], factory: Callable[[], Sketch]) -> Sketch:
-    out = factory()
-    for s in sketches:
-        out.merge(s)
-    return out
 
 
 def multi_sketch_build(df: DataFrame, specs: dict[str, tuple],

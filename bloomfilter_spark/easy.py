@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame
 from .agg import build_sketch, with_membership
 from .config import DEFAULT_FPR, DEFAULT_SEED
 from .sizing import suggest_sizing
-from .sketches import KLL, BloomFilter, CountMinSketch, HyperLogLog, TDigest
+from .sketches import KLL, BloomFilter, HyperLogLog, TDigest
 
 
 def bloom_fit(df: DataFrame, cols, fpr: float = DEFAULT_FPR,
@@ -54,14 +54,6 @@ def approx_distinct(df: DataFrame, cols, p: int = 14,
                     seed: int = DEFAULT_SEED) -> float:
     """Distributed HLL distinct-count estimate."""
     return build_sketch(df, cols, lambda: HyperLogLog(p), seed=seed).estimate()
-
-
-def approx_frequencies(df: DataFrame, cols, keys_df: DataFrame | None = None,
-                       eps: float = 1e-4, delta: float = 1e-3,
-                       seed: int = DEFAULT_SEED) -> CountMinSketch:
-    """Distributed CMS; query it with .query(hashes) or with_cms_count."""
-    return build_sketch(df, cols, lambda: CountMinSketch(eps=eps, delta=delta),
-                        seed=seed)
 
 
 def approx_quantiles(df: DataFrame, col, qs: Sequence[float],

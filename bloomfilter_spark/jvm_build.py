@@ -25,6 +25,11 @@ tests/test_jvm_build.py), so JVM-built and kernel-built sketches merge
 freely, answer membership through the same broadcast/cogroup query paths,
 and satisfy the same zero-false-negative / FPR-bound / merge-algebra laws.
 
+Grouped builds (keys..., sketch binary) reduce to per-(key, cell) rows
+the same way; `_pack_by_key` then collects each key's cells into one
+list and packs whole Arrow batches of keys in one mapInArrow pass, so
+Python pays per batch, not ~2 ms of grouped-map overhead per key.
+
 ANSI note: Kirsch-Mitzenmacher probe derivation needs mod-2^64 wrap
 arithmetic (splitmix64's multiplies). Spark 4 defaults to ANSI mode, where
 long overflow raises, so the Bloom plan is built and executed inside a
@@ -39,14 +44,14 @@ from contextlib import contextmanager
 from typing import Sequence
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .config import DEFAULT_SEED, WGL_THRESHOLD_LOCK
 from .agg import _cols, hash_col
 from .sketches.bloom import BloomFilter
 from .sketches.hll import HyperLogLog
-from .operators.sharded import SHARD_TABLE_SCHEMA, shard_geometry
+from .operators.sharded import shard_geometry
 from .util import U64, clz64, log2_power_of_two
 
 _MIN64 = -(1 << 63)
@@ -85,6 +90,77 @@ def _notnull(cs: Sequence[Column]) -> Column:
 
 
 # --------------------------------------------------------------------------
+# per-key packing: the one Python step of every grouped build
+# --------------------------------------------------------------------------
+
+#: Bytes of dense state `_dense_rows` allocates, and of blobs `_pack_by_key`
+#: buffers, at once: a batch holds up to 262,144 keys, and at p=18 HLL
+#: (256 KiB a key) their dense (rows, state) array would be 64 GiB.
+_SCATTER_BUDGET = 16 << 20
+
+
+def _pack_by_key(cells: DataFrame, keys: list[str], fields: list[str],
+                 pack) -> DataFrame:
+    """(keys..., sketch binary), one row per key, from already-reduced
+    cell rows: ONE `groupBy(keys).agg(collect_list(struct(fields)))`, then
+    ONE mapInArrow pass that packs whole Arrow batches of keys.
+
+    ``pack(offsets, cols)`` gets a batch's list offsets (one more than its
+    keys) and its flattened cell ``fields`` as numpy arrays by name, and
+    yields one blob per key in batch order. collect_list keeps no row
+    order, so a packer must be order-free or sort."""
+    schema = ", ".join(
+        f"`{k}` {cells.schema[k].dataType.simpleString()}" for k in keys
+    ) + ", sketch binary"
+
+    def run(batches):
+        for rb in batches:
+            lst = rb.column(len(keys))
+            cols = {f: lst.values.field(f).to_numpy(zero_copy_only=False)
+                    for f in fields}
+            blobs, size, done = [], 0, 0
+            for blob in pack(lst.offsets.to_numpy(), cols):
+                blobs.append(blob)
+                size += len(blob)
+                if size >= _SCATTER_BUDGET or done + len(blobs) == rb.num_rows:
+                    part = rb.slice(done, len(blobs)).columns[:len(keys)]
+                    yield pa.RecordBatch.from_arrays(
+                        part + [pa.array(blobs, type=pa.binary())],
+                        names=keys + ["sketch"])
+                    done, blobs, size = done + len(blobs), [], 0
+
+    return (cells.groupBy(*keys)
+                 .agg(F.collect_list(F.struct(*fields)).alias("__cells"))
+                 .mapInArrow(run, schema))
+
+
+def _dense_rows(offsets: np.ndarray, idx: np.ndarray,
+                vals: Sequence[np.ndarray], width: int):
+    """Per key, in batch order: a tuple of ``width``-long state rows, one
+    per ``vals`` array (of its dtype), zero but for the key's cells at
+    ``idx``. One fancy assignment per value array scatters a chunk of
+    keys at a time, the chunk sized to _SCATTER_BUDGET (at least one)."""
+    n = offsets.size - 1
+    step = max(1, _SCATTER_BUDGET // (width * sum(v.itemsize for v in vals)))
+    for r0 in range(0, n, step):
+        r1 = min(r0 + step, n)
+        lo, hi = offsets[r0], offsets[r1]
+        row = np.repeat(np.arange(r1 - r0), np.diff(offsets[r0:r1 + 1]))
+        dense = []
+        for v in vals:
+            d = np.zeros((r1 - r0, width), dtype=v.dtype)
+            d[row, idx[lo:hi]] = v[lo:hi]
+            dense.append(d)
+        yield from zip(*dense)
+
+
+def _key_slices(offsets: np.ndarray, *cols: np.ndarray):
+    """Per key, in batch order: its slice of each flattened cell array."""
+    for lo, hi in zip(offsets[:-1], offsets[1:]):
+        yield tuple(c[lo:hi] for c in cols)
+
+
+# --------------------------------------------------------------------------
 # HLL
 # --------------------------------------------------------------------------
 
@@ -94,21 +170,12 @@ def hll_build_jvm(df: DataFrame, cols, p: int = 14,
 
     max(rho) per register == rho(min(rest)) in unsigned order, because clz
     is non-increasing in its argument; unsigned order on int64 is signed
-    order after flipping the sign bit."""
-    cs = _cols(cols)
-    h = hash_col(cs, seed)
-    reg = F.shiftrightunsigned(h, 64 - p)
-    key = F.shiftleft(h, p).bitwiseXOR(F.lit(_MIN64))
-    pdf = (df.where(_notnull(cs))
-             .select(reg.alias("r"), key.alias("k"))
-             .groupBy("r").agg(F.min("k").alias("mk"))
-             .toPandas())
+    order after flipping the sign bit. rho itself is computed in codegen
+    (`_hll_rho_cells`), so Python only scatters (register, rho) pairs."""
     sk = HyperLogLog(p)
-    if len(pdf):
-        rest = (pdf["mk"].to_numpy(dtype=np.int64).view(U64)
-                ^ U64(1 << 63))
-        rho = np.minimum(clz64(rest) + 1, 64 - p + 1).astype(np.uint8)
-        sk.registers[pdf["r"].to_numpy(dtype=np.int64)] = rho
+    pdf = _hll_rho_cells(df, [], cols, p, seed).toPandas()
+    sk.registers[pdf["__reg"].to_numpy(dtype=np.int64)] = \
+        pdf["__rho"].to_numpy(dtype=np.uint8)
     return sk
 
 
@@ -121,6 +188,23 @@ def _clz64_col(c: Column) -> Column:
     for s in (1, 2, 4, 8, 16, 32):
         x = x.bitwiseOR(F.shiftrightunsigned(x, s))
     return F.lit(64) - F.bit_count(x)
+
+
+def _hll_rho_cells(df: DataFrame, keys: list[str], cols, p: int,
+                   seed: int) -> DataFrame:
+    """(keys..., __reg, __rho): one row per occupied (key, register), its
+    value max(rho) computed as rho(min(rest)) in unsigned order (see
+    hll_build_jvm) — a map-side-combined aggregate, rho in codegen."""
+    cs = _cols(cols)
+    h = hash_col(cs, seed)
+    reg = F.shiftrightunsigned(h, 64 - p)
+    mapped = F.shiftleft(h, p).bitwiseXOR(F.lit(_MIN64))  # unsigned-order key
+    per_reg = (df.where(_notnull(cs))
+                 .groupBy(*keys, reg.alias("__reg"))
+                 .agg(F.min(mapped).alias("__mk")))
+    rest = F.col("__mk").bitwiseXOR(F.lit(_MIN64))  # u64 bits of h << p
+    rho = F.least(_clz64_col(rest) + F.lit(1), F.lit(64 - p + 1))
+    return per_reg.select(*keys, "__reg", rho.alias("__rho"))
 
 
 def hll_grouped_estimate_jvm(df: DataFrame, keys, cols, p: int = 14,
@@ -143,24 +227,15 @@ def hll_grouped_estimate_jvm(df: DataFrame, keys, cols, p: int = 14,
     Returns df.select(keys..., out_col double). For a *mergeable* per-key
     sketch table (to checkpoint or union across corpora), use
     `agg.grouped_sketch_table`; this function is the terminal fast path."""
-    from .sketches.hll import HyperLogLog, _alpha
+    from .sketches.hll import _alpha
     HyperLogLog(p)  # validate p
     keys = [keys] if isinstance(keys, str) else list(keys)
-    cs = _cols(cols)
-    h = hash_col(cs, seed)
-    reg = F.shiftrightunsigned(h, 64 - p)
-    mapped = F.shiftleft(h, p).bitwiseXOR(F.lit(_MIN64))  # unsigned-order key
-    per_reg = (df.where(_notnull(cs))
-                 .groupBy(*keys, reg.alias("__reg"))
-                 .agg(F.min(mapped).alias("__mk")))
-    rest = F.col("__mk").bitwiseXOR(F.lit(_MIN64))  # u64 bits of h << p
-    rho = F.least(_clz64_col(rest) + F.lit(1), F.lit(64 - p + 1))
     m = float(1 << p)
     alpha = _alpha(1 << p)
-    per_key = (per_reg.select(*keys, rho.alias("__rho"))
-                      .groupBy(*keys)
-                      .agg(F.sum(F.pow(F.lit(0.5), F.col("__rho"))).alias("__s"),
-                           F.count(F.lit(1)).alias("__c")))
+    per_key = (_hll_rho_cells(df, keys, cols, p, seed)
+               .groupBy(*keys)
+               .agg(F.sum(F.pow(F.lit(0.5), F.col("__rho"))).alias("__s"),
+                    F.count(F.lit(1)).alias("__c")))
     zeros = F.lit(m) - F.col("__c").cast("double")
     raw = F.lit(alpha * m * m) / (F.col("__s") + zeros)
     est = F.when((raw <= F.lit(2.5 * m)) & (zeros > F.lit(0.0)),
@@ -175,33 +250,25 @@ def hll_grouped_build_jvm(df: DataFrame, keys, cols, p: int = 14,
     `hll_grouped_estimate_jvm` (which is terminal: it returns estimates,
     not state). Byte-identical per key to the kernel grouped build
     (`agg.grouped_sketch_table`; tested). One map-side-combined
-    `groupBy(keys, register).agg(min(rest))` — ≤ |keys| * 2^p rows reach
-    assembly, never n — then `applyInPandas` packs each key's registers.
-    Persist (warehouse.save_sketch_table), union across corpora, estimate
-    from SQL (sketch_estimate)."""
+    `groupBy(keys, register).agg(min(rest))`, rho in codegen — ≤ |keys| *
+    2^p `register*256 + rho` ints reach `_pack_by_key`, never n. Persist
+    (warehouse.save_sketch_table), union across corpora, estimate from
+    SQL (sketch_estimate)."""
     HyperLogLog(p)  # validate p
     keys = [keys] if isinstance(keys, str) else list(keys)
-    cs = _cols(cols)
-    h = hash_col(cs, seed)
-    reg = F.shiftrightunsigned(h, 64 - p)
-    mapped = F.shiftleft(h, p).bitwiseXOR(F.lit(_MIN64))  # unsigned-order key
-    out_schema = ", ".join(
-        f"{kk} {df.schema[kk].dataType.simpleString()}" for kk in keys
-    ) + ", sketch binary"
+    packed = (F.col("__reg") * 256 + F.col("__rho")).cast("int")
+    cells = _hll_rho_cells(df, keys, cols, p, seed).select(
+        *keys, packed.alias("__c"))
 
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = HyperLogLog(p)
-        rest = pdf["__mk"].to_numpy(dtype=np.int64).view(U64) ^ U64(1 << 63)
-        rho = np.minimum(clz64(rest) + 1, 64 - p + 1).astype(np.uint8)
-        sk.registers[pdf["__reg"].to_numpy(dtype=np.int64)] = rho
-        row = {kk: [pdf[kk].iloc[0]] for kk in keys}
-        row["sketch"] = [sk.to_bytes()]
-        return pd.DataFrame(row)
+    def pack(offsets, c):
+        packed = c["__c"]
+        for (regs,) in _dense_rows(offsets, packed >> 8,
+                                   [(packed & 255).astype(np.uint8)], 1 << p):
+            sk = HyperLogLog(p)
+            sk.registers = regs
+            yield sk.to_bytes()
 
-    per_reg = (df.where(_notnull(cs))
-                 .groupBy(*keys, reg.alias("__reg"))
-                 .agg(F.min(mapped).alias("__mk")))
-    return per_reg.groupBy(*keys).applyInPandas(assemble, schema=out_schema)
+    return _pack_by_key(cells, keys, ["__c"], pack)
 
 
 # --------------------------------------------------------------------------
@@ -342,32 +409,44 @@ def multi_sketch_build_jvm(df: DataFrame, specs: dict,
 # Bloom (sharded)
 # --------------------------------------------------------------------------
 
-def _bloom_word_updates(df: DataFrame, cols, n_shards: int, m_shard: int,
-                        k: int, seed: int) -> DataFrame:
-    """(global_word_index, or-ed word value) updates for the sharded filter;
-    same shard routing and K-M/splitmix probe scheme as the kernel path."""
+def _bloom_word_updates(df: DataFrame, keys: list[str], cols,
+                        n_shards: int, m_shard: int, k: int,
+                        seed: int) -> DataFrame:
+    """(keys..., global_word_index, or-ed word value) updates for the
+    sharded filter (one filter per key); same shard routing and
+    K-M/splitmix probe scheme as the kernel path."""
     from .operators.sharded import _shard_shift
     cs = _cols(cols)
-    wps = m_shard // 64  # words per shard (power of two)
-    h = hash_col(cs, seed)
-    base = df.where(_notnull(cs)).select(h.alias("__h"))
-    if n_shards == 1:
-        shard = F.lit(0).cast("long")
-    else:
-        shard = F.shiftrightunsigned(F.col("__h"), _shard_shift(n_shards))
-    h2 = _splitmix64_col(F.col("__h")).bitwiseOR(F.lit(1))
+    base = (df.where(_notnull(cs))
+              .select(*keys, hash_col(cs, seed).alias("__h"))
+              .withColumn("__h2",
+                          _splitmix64_col(F.col("__h")).bitwiseOR(F.lit(1))))
     probes = []
     for i in range(k):
-        p_i = (F.col("__h") + F.lit(i) * h2).bitwiseAND(F.lit(m_shard - 1))
-        word = shard * F.lit(wps) + F.shiftrightunsigned(p_i, 6)
-        mask = F.expr("shiftleft(1L, CAST(__pb AS INT))")
+        p_i = (F.col("__h") + F.lit(i) * F.col("__h2")) \
+            .bitwiseAND(F.lit(m_shard - 1))
+        word = F.shiftrightunsigned(p_i, 6)
+        if n_shards > 1:  # shard * words-per-shard + word
+            shard = F.shiftrightunsigned(F.col("__h"), _shard_shift(n_shards))
+            word = shard * F.lit(m_shard // 64) + word
         probes.append(F.struct(word.alias("w"),
-                               p_i.bitwiseAND(F.lit(63)).alias("__pb")))
-    exploded = (base.select(F.explode(F.array(*probes)).alias("p"))
-                    .select(F.col("p.w").alias("w"),
-                            F.col("p.__pb").alias("__pb"))
-                    .select("w", mask.alias("m")))
-    return exploded.groupBy("w").agg(F.bit_or("m").alias("bits"))
+                               p_i.bitwiseAND(F.lit(63)).alias("b")))
+    return (base.select(*keys, F.explode(F.array(*probes)).alias("p"))
+                .select(*keys, F.col("p.w").alias("w"),
+                        F.expr("shiftleft(1L, CAST(p.b AS INT))").alias("m"))
+                .groupBy(*keys, "w").agg(F.bit_or("m").alias("bits")))
+
+
+def _bloom_pack(m: int, k: int, word_mask: int):
+    """`_pack_by_key` packer for (w, bits) word rows into (m, k) filters;
+    ``word_mask`` maps a global word index to the filter's own."""
+    def pack(offsets, c):
+        for (words,) in _dense_rows(offsets, c["w"] & word_mask,
+                                    [c["bits"].view(U64)], m // 64):
+            bf = BloomFilter(m, k)
+            bf.words = words
+            yield bf.to_bytes()
+    return pack
 
 
 def cms_build_jvm(df: DataFrame, cols, width: int | None = None,
@@ -394,36 +473,44 @@ def cms_build_jvm(df: DataFrame, cols, width: int | None = None,
     from .sketches.cms import CountMinSketch
     proto = CountMinSketch(width=width, depth=depth, eps=eps, delta=delta)
     w, d = proto.width, proto.depth
-    cs = _cols(cols)
-    spark = df.sparkSession
-    with _wrap_arithmetic(spark):
-        proj = [hash_col(cs, seed).alias("__h")]
-        if weight_col is not None:
-            proj.append(F.floor(F.col(weight_col)).cast("long").alias("__w"))
-        base = (df.where(_notnull(cs)).select(*proj)
-                  .withColumn("__h2",
-                              _splitmix64_col(F.col("__h")).bitwiseOR(F.lit(1))))
-        structs = []
-        for j in range(1, d + 1):
-            base = base.withColumn(f"__g{j}", F.expr(f"__h + {j}L * __h2"))
-            rem = (f"(__g{j} - (shiftrightunsigned(__g{j}, 1) div {w}L)"
-                   f" * {2 * w}L)")
-            col = f"(CASE WHEN {rem} >= {w}L THEN {rem} - {w}L ELSE {rem} END)"
-            structs.append(f"struct({j - 1} AS r, {col} AS c)")
-        wsel = ["__w"] if weight_col is not None else []
-        cells = (base.selectExpr(
-                     f"explode(array({', '.join(structs)})) AS p", *wsel)
-                     .groupBy("p.r", "p.c")
-                     .agg((F.sum("__w") if weight_col is not None
-                           else F.count("*")).alias("n")))
-        pdf = cells.toPandas()
+    with _wrap_arithmetic(df.sparkSession):
+        pdf = _cms_cells(df, [], cols, w, d, seed, weight_col).toPandas()
     sk = CountMinSketch(width=w, depth=d)
     if len(pdf):
-        sk.table[pdf["r"].to_numpy(dtype=np.int64),
-                 pdf["c"].to_numpy(dtype=np.int64)] = \
-            pdf["n"].to_numpy(dtype=np.int64).view(U64)
-        sk.total = int(pdf.loc[pdf["r"] == 0, "n"].sum())
+        sk.table[pdf["__r"].to_numpy(dtype=np.int64),
+                 pdf["__c"].to_numpy(dtype=np.int64)] = \
+            pdf["__n"].to_numpy(dtype=np.int64).view(U64)
+        sk.total = int(pdf.loc[pdf["__r"] == 0, "__n"].sum())
     return sk
+
+
+def _cms_cells(df: DataFrame, keys: list[str], cols, w: int, d: int,
+               seed: int, weight_col: str | None = None) -> DataFrame:
+    """(keys..., __r, __c, __n): each row's d (row, col) cells under the K-M
+    column derivation (see cms_build_jvm), counted per key in one codegen
+    aggregate (__n = sum(weight) with ``weight_col``). Wrap arithmetic must
+    be active."""
+    cs = _cols(cols)
+    proj = [*keys, hash_col(cs, seed).alias("__h")]
+    if weight_col is not None:
+        proj.append(F.floor(F.col(weight_col)).cast("long").alias("__w"))
+    base = (df.where(_notnull(cs)).select(*proj)
+              .withColumn("__h2",
+                          _splitmix64_col(F.col("__h")).bitwiseOR(F.lit(1))))
+    structs = []
+    for j in range(1, d + 1):
+        base = base.withColumn(f"__g{j}", F.expr(f"__h + {j}L * __h2"))
+        rem = (f"(__g{j} - (shiftrightunsigned(__g{j}, 1) div {w}L)"
+               f" * {2 * w}L)")
+        col = f"(CASE WHEN {rem} >= {w}L THEN {rem} - {w}L ELSE {rem} END)"
+        structs.append(f"struct({j - 1} AS r, {col} AS c)")
+    wsel = ["__w"] if weight_col is not None else []
+    return (base.selectExpr(*keys, f"explode(array({', '.join(structs)})) AS p",
+                            *wsel)
+                .groupBy(*keys, F.col("p.r").alias("__r"),
+                         F.col("p.c").alias("__c"))
+                .agg((F.sum("__w") if weight_col is not None
+                      else F.count("*")).alias("__n")))
 
 
 def cms_grouped_build_jvm(df: DataFrame, keys, cols,
@@ -437,8 +524,8 @@ def cms_grouped_build_jvm(df: DataFrame, keys, cols,
 
     Plan: each row explodes into its d (row, col) cells (same K-M column
     derivation as cms_build_jvm), one codegen `groupBy(keys, r, c).count()`
-    with map-side partial aggregation, then `applyInPandas` per key
-    assembles the table cells into a blob. Shuffle volume is bounded by
+    with map-side partial aggregation, then `_pack_by_key` scatters whole
+    Arrow batches of keys' cells into tables. Shuffle volume is bounded by
     cells-touched-per-task and at most |keys| * d*w rows reach the
     assembly stage — never n. This is the 100 TB path for per-day /
     per-source heavy-hitter tables that must remain MERGEABLE and
@@ -449,39 +536,19 @@ def cms_grouped_build_jvm(df: DataFrame, keys, cols,
     proto = CountMinSketch(width=width, depth=depth, eps=eps, delta=delta)
     w, d = proto.width, proto.depth
     keys = [keys] if isinstance(keys, str) else list(keys)
-    cs = _cols(cols)
-    spark = df.sparkSession
-    out_schema = ", ".join(
-        f"{k} {df.schema[k].dataType.simpleString()}" for k in keys
-    ) + ", sketch binary"
 
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = CountMinSketch(width=w, depth=d)
-        sk.table[pdf["r"].to_numpy(dtype=np.int64),
-                 pdf["c"].to_numpy(dtype=np.int64)] = \
-            pdf["n"].to_numpy(dtype=np.int64).view(U64)
-        sk.total = int(pdf.loc[pdf["r"] == 0, "n"].sum())
-        row = {k: [pdf[k].iloc[0]] for k in keys}
-        row["sketch"] = [sk.to_bytes()]
-        return pd.DataFrame(row)
+    def pack(offsets, c):
+        for (tab,) in _dense_rows(offsets, c["__i"], [c["__n"].view(U64)],
+                                  d * w):
+            sk = CountMinSketch(width=w, depth=d)
+            sk.table = tab.reshape(d, w)
+            sk.total = int(tab[:w].sum())  # every update hits row 0 once
+            yield sk.to_bytes()
 
-    with _wrap_arithmetic(spark):
-        base = (df.where(_notnull(cs))
-                  .select(*keys, hash_col(cs, seed).alias("__h"))
-                  .withColumn("__h2",
-                              _splitmix64_col(F.col("__h")).bitwiseOR(F.lit(1))))
-        structs = []
-        for j in range(1, d + 1):
-            base = base.withColumn(f"__g{j}", F.expr(f"__h + {j}L * __h2"))
-            rem = (f"(__g{j} - (shiftrightunsigned(__g{j}, 1) div {w}L)"
-                   f" * {2 * w}L)")
-            col = f"(CASE WHEN {rem} >= {w}L THEN {rem} - {w}L ELSE {rem} END)"
-            structs.append(f"struct({j - 1} AS r, {col} AS c)")
-        cells = (base.selectExpr(*keys,
-                                 f"explode(array({', '.join(structs)})) AS p")
-                     .groupBy(*keys, "p.r", "p.c")
-                     .agg(F.count("*").alias("n")))
-        out = cells.groupBy(*keys).applyInPandas(assemble, schema=out_schema)
+    with _wrap_arithmetic(df.sparkSession):
+        cells = _cms_cells(df, keys, cols, w, d, seed).select(
+            *keys, (F.col("__r") * w + F.col("__c")).alias("__i"), "__n")
+        out = _pack_by_key(cells, keys, ["__i", "__n"], pack)
         # materialize inside the wrap window so the executed plan carries
         # the non-ANSI evaluation mode it was built with
         out = out.cache()
@@ -503,9 +570,9 @@ def bloom_grouped_build_jvm(df: DataFrame, keys, cols,
 
     Plan: k (word, bit) probe pairs per row (same K-M derivation as the
     kernel, n_shards=1 routing), one map-side-combined
-    `groupBy(keys, word).agg(bit_or(mask))`, then `applyInPandas` per key
-    packs words into a blob — at most |keys| * m/64 rows reach assembly,
-    never n.
+    `groupBy(keys, word).agg(bit_or(mask))`, then `_pack_by_key` scatters
+    whole Arrow batches of keys' words into blobs — at most |keys| * m/64
+    rows reach assembly, never n.
 
     Geometry is shared by every key (a mergeable table needs one (m, k)):
     size via ``capacity`` = expected distinct insertions of the LARGEST
@@ -519,38 +586,11 @@ def bloom_grouped_build_jvm(df: DataFrame, keys, cols,
     proto = BloomFilter(m, k)           # clamps m to a power of two
     m, wps = proto.num_bits, proto.num_bits // 64
     keys = [keys] if isinstance(keys, str) else list(keys)
-    cs = _cols(cols)
-    spark = df.sparkSession
-    out_schema = ", ".join(
-        f"{kk} {df.schema[kk].dataType.simpleString()}" for kk in keys
-    ) + ", sketch binary"
 
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        bf = BloomFilter(m, k)
-        bf.words[pdf["w"].to_numpy(dtype=np.int64)] = \
-            pdf["bits"].to_numpy(dtype=np.int64).view(U64)
-        row = {kk: [pdf[kk].iloc[0]] for kk in keys}
-        row["sketch"] = [bf.to_bytes()]
-        return pd.DataFrame(row)
-
-    with _wrap_arithmetic(spark):
-        base = (df.where(_notnull(cs))
-                  .select(*keys, hash_col(cs, seed).alias("__h"))
-                  .withColumn("__h2",
-                              _splitmix64_col(F.col("__h")).bitwiseOR(F.lit(1))))
-        probes = []
-        for i in range(k):
-            p_i = (F.col("__h") + F.lit(i) * F.col("__h2")) \
-                .bitwiseAND(F.lit(m - 1))
-            probes.append(F.struct(
-                F.shiftrightunsigned(p_i, 6).alias("w"),
-                p_i.bitwiseAND(F.lit(63)).alias("b")))
-        words = (base.select(*keys, F.explode(F.array(*probes)).alias("p"))
-                     .select(*keys, F.col("p.w").alias("w"),
-                             F.expr("shiftleft(1L, CAST(p.b AS INT))")
-                              .alias("m"))
-                     .groupBy(*keys, "w").agg(F.bit_or("m").alias("bits")))
-        out = words.groupBy(*keys).applyInPandas(assemble, schema=out_schema)
+    with _wrap_arithmetic(df.sparkSession):
+        words = _bloom_word_updates(df, keys, cols, 1, m, k, seed)
+        out = _pack_by_key(words, keys, ["w", "bits"],
+                           _bloom_pack(m, k, wps - 1))
         # materialize inside the wrap window so the executed plan carries
         # the non-ANSI evaluation mode it was built with
         out = out.cache()
@@ -565,11 +605,12 @@ def quantile_grouped_build_preagg(df: DataFrame, keys, col, factory,
 
     `groupBy(keys, value).count()` runs in codegen with map-side partial
     aggregation, so only (key, distinct-value, count) triples cross the
-    Arrow pipe — |keys| * per-key-cardinality rows, never n — and each
-    key's sketch absorbs its pairs via one weighted insert. Pairs are
-    sorted by value before insertion, making the blob a deterministic
-    function of the key's value histogram (partition/cluster invariant —
-    tested); the same published rank bounds hold (update_weighted).
+    Arrow pipe — |keys| * per-key-cardinality rows, never n — and
+    `_pack_by_key` has each key's sketch absorb its pairs via one
+    weighted insert. Pairs are sorted by value before insertion, making
+    the blob a deterministic function of the key's value histogram
+    (partition/cluster invariant — tested); the same published rank
+    bounds hold (update_weighted).
 
     ``max_cardinality`` bounds the per-key distinct-value count (checked
     per key at assembly); beyond it use the kernel grouped build
@@ -581,28 +622,22 @@ def quantile_grouped_build_preagg(df: DataFrame, keys, col, factory,
                          "sketches (KLL/TDigest), not hash-keyed ones")
     keys = [keys] if isinstance(keys, str) else list(keys)
     c = _cols([col])[0].cast("double")
-    out_schema = ", ".join(
-        f"{k} {df.schema[k].dataType.simpleString()}" for k in keys
-    ) + ", sketch binary"
 
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) > max_cardinality:
-            raise ValueError(
-                f"key {tuple(pdf[k].iloc[0] for k in keys)!r} has > "
-                f"{max_cardinality} distinct values; use the kernel "
-                "grouped build (agg.grouped_sketch_table)")
-        pdf = pdf.sort_values("__v")
-        sk = factory()
-        sk.update_weighted(pdf["__v"].to_numpy(dtype=np.float64),
-                           pdf["__w"].to_numpy(dtype=np.int64))
-        row = {k: [pdf[k].iloc[0]] for k in keys}
-        row["sketch"] = [sk.to_bytes()]
-        return pd.DataFrame(row)
+    def pack(offsets, cols):
+        for v, w in _key_slices(offsets, cols["__v"], cols["__w"]):
+            if v.size > max_cardinality:
+                raise ValueError(
+                    f"a key has > {max_cardinality} distinct values; use "
+                    "the kernel grouped build (agg.grouped_sketch_table)")
+            order = np.argsort(v)
+            sk = factory()
+            sk.update_weighted(v[order], w[order])
+            yield sk.to_bytes()
 
     cells = (df.where(c.isNotNull() & ~F.isnan(c))
                .groupBy(*keys, c.alias("__v"))
                .agg(F.count(F.lit(1)).alias("__w")))
-    return cells.groupBy(*keys).applyInPandas(assemble, schema=out_schema)
+    return _pack_by_key(cells, keys, ["__v", "__w"], pack)
 
 
 def build_sharded_bloom_jvm(df: DataFrame, cols, capacity: int,
@@ -610,7 +645,8 @@ def build_sharded_bloom_jvm(df: DataFrame, cols, capacity: int,
                             seed: int = DEFAULT_SEED) -> DataFrame:
     """JVM-reduced sharded Bloom build: returns the same shard table
     (shard int, sketch binary) as operators.sharded.build_sharded_bloom,
-    byte-identical, but only m/64 rows ever reach Python."""
+    byte-identical, but only m/64 rows ever reach Python, packed a whole
+    Arrow batch of shards at a time (`_pack_by_key`)."""
     from .operators.sharded import effective_shards
     spark = df.sparkSession
     n_shards = effective_shards(n_shards)
@@ -618,20 +654,12 @@ def build_sharded_bloom_jvm(df: DataFrame, cols, capacity: int,
     wps = m_shard // 64
     shift = log2_power_of_two(wps)
     with _wrap_arithmetic(spark):
-        words = _bloom_word_updates(df, cols, n_shards, m_shard, k, seed)
+        words = _bloom_word_updates(df, [], cols, n_shards, m_shard, k, seed)
         words = words.withColumn(
             "shard", F.shiftrightunsigned("w", shift).cast("int"))
-
-        def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-            bf = BloomFilter(m_shard, k)
-            idx = pdf["w"].to_numpy(dtype=np.int64) & (wps - 1)
-            bf.words[idx] = pdf["bits"].to_numpy(dtype=np.int64).view(U64)
-            return pd.DataFrame({"shard": [int(pdf["shard"].iloc[0])],
-                                 "sketch": [bf.to_bytes()],
-                                 "n_shards": [n_shards]})
-
-        out = (words.groupBy("shard")
-                    .applyInPandas(assemble, schema=SHARD_TABLE_SCHEMA))
+        out = (_pack_by_key(words, ["shard"], ["w", "bits"],
+                            _bloom_pack(m_shard, k, wps - 1))
+               .withColumn("n_shards", F.lit(n_shards)))
         # materialize inside the wrap window so the executed plan carries
         # the non-ANSI evaluation mode it was built with
         out = out.cache()
@@ -668,16 +696,15 @@ def theta_build_jvm(df: DataFrame, cols, k: int = 4096,
     smaller corpus pays one extra filtered scan whose dedup is tiny by
     the same bound — cheap exactly when the fallback full pass is also
     cheap."""
-    from .sketches.theta import ThetaSketch, _THETA_MAX
-    sk = ThetaSketch(k)  # validates k
+    from .sketches.theta import ThetaSketch
+    ThetaSketch(k)  # validates k
     cs = _cols(cols)
     hf = hash_col(cs, seed).bitwiseXOR(F.lit(_MIN64))  # unsigned-order key
     base = df.where(_notnull(cs)).select(hf.alias("hf"))
 
     def smallest(src: DataFrame) -> np.ndarray:
         pdf = src.distinct().orderBy("hf").limit(k + 1).toPandas()
-        arr = pdf["hf"].to_numpy(dtype=np.int64).view(U64) ^ U64(1 << 63)
-        return np.sort(arr)
+        return pdf["hf"].to_numpy(dtype=np.int64)
 
     arr = None
     if expected_n is None:
@@ -709,12 +736,38 @@ def theta_build_jvm(df: DataFrame, cols, k: int = 4096,
                 arr = cand
     if arr is None:
         arr = smallest(base)
+    return _theta_pack(arr, k)
+
+
+def _theta_pack(hf: np.ndarray, k: int):
+    """Pack distinct unsigned-order hashes (XOR-shifted int64, any order)
+    into the eager-trim canonical ThetaSketch — shared by the grouped and
+    global builds."""
+    from .sketches.theta import ThetaSketch, _THETA_MAX
+    arr = np.sort(hf.astype(np.int64).view(U64) ^ U64(1 << 63))
     arr = arr[arr < _THETA_MAX]
+    sk = ThetaSketch(k)
     if arr.size > k:
         sk.theta = arr[k]
         arr = arr[:k]
     sk.retained = arr
     return sk
+
+
+def _theta_ranked(df: DataFrame, keys: list[str], cols, k: int,
+                  seed: int) -> DataFrame:
+    """(keys..., __hf, __rn): each key's k+1 smallest distinct hashes
+    (unsigned-order int64) with their rank — distinct (key, hash) rows
+    into a per-key window, shuffle-partitioned, never a global sort."""
+    from pyspark.sql import Window
+    from .sketches.theta import ThetaSketch
+    ThetaSketch(k)  # validate k
+    cs = _cols(cols)
+    hf = hash_col(cs, seed).bitwiseXOR(F.lit(_MIN64))  # unsigned-order key
+    d = df.where(_notnull(cs)).select(*keys, hf.alias("__hf")).distinct()
+    w = Window.partitionBy(*keys).orderBy("__hf")
+    return (d.withColumn("__rn", F.row_number().over(w))
+             .where(F.col("__rn") <= k + 1))
 
 
 def theta_grouped_estimate_jvm(df: DataFrame, keys, cols, k: int = 4096,
@@ -731,18 +784,8 @@ def theta_grouped_estimate_jvm(df: DataFrame, keys, cols, k: int = 4096,
     normalizes theta through the same flipped-int64 arithmetic. Window
     input is one row per distinct (key, hash) — the sort is per-key,
     shuffle-partitioned, never global."""
-    from pyspark.sql import Window
-    from .sketches.theta import ThetaSketch
-    ThetaSketch(k)  # validate k
     keys = [keys] if isinstance(keys, str) else list(keys)
-    cs = _cols(cols)
-    hf = hash_col(cs, seed).bitwiseXOR(F.lit(_MIN64))
-    d = (df.where(_notnull(cs))
-           .select(*keys, hf.alias("__hf")).distinct())
-    w = Window.partitionBy(*keys).orderBy("__hf")
-    ranked = (d.withColumn("__rn", F.row_number().over(w))
-               .where(F.col("__rn") <= k + 1))
-    per_key = ranked.groupBy(*keys).agg(
+    per_key = _theta_ranked(df, keys, cols, k, seed).groupBy(*keys).agg(
         F.max(F.when(F.col("__rn") == k + 1, F.col("__hf"))).alias("__th"),
         F.sum(F.when(F.col("__rn") <= k, 1).otherwise(0)).alias("__n"))
     theta_norm = ((F.col("__th").cast("double") + F.lit(float(1 << 63)))
@@ -760,37 +803,17 @@ def theta_grouped_build_jvm(df: DataFrame, keys, cols, k: int = 4096,
     retained = the k smallest distinct hashes, theta = the (k+1)-th;
     tested). Plan: distinct (key, hash) -> per-key window rank in
     unsigned order, keep rank <= k+1 (≤ |keys| * (k+1) rows reach
-    assembly) -> `applyInPandas` packs each key's retained set. The sort
-    is per-key, shuffle-partitioned, never global."""
-    from pyspark.sql import Window
-    from .sketches.theta import ThetaSketch, _THETA_MAX
-    ThetaSketch(k)  # validate k
+    assembly) -> `_pack_by_key` packs whole Arrow batches of keys'
+    retained sets. The sort is per-key, shuffle-partitioned, never
+    global."""
     keys = [keys] if isinstance(keys, str) else list(keys)
-    cs = _cols(cols)
-    hf = hash_col(cs, seed).bitwiseXOR(F.lit(_MIN64))  # unsigned-order key
-    out_schema = ", ".join(
-        f"{kk} {df.schema[kk].dataType.simpleString()}" for kk in keys
-    ) + ", sketch binary"
 
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        arr = np.sort(pdf["__hf"].to_numpy(dtype=np.int64).view(U64)
-                      ^ U64(1 << 63))
-        arr = arr[arr < _THETA_MAX]
-        sk = ThetaSketch(k)
-        if arr.size > k:
-            sk.theta = arr[k]
-            arr = arr[:k]
-        sk.retained = arr
-        row = {kk: [pdf[kk].iloc[0]] for kk in keys}
-        row["sketch"] = [sk.to_bytes()]
-        return pd.DataFrame(row)
+    def pack(offsets, c):
+        for (h,) in _key_slices(offsets, c["__hf"]):
+            yield _theta_pack(h, k).to_bytes()
 
-    d = (df.where(_notnull(cs))
-           .select(*keys, hf.alias("__hf")).distinct())
-    w = Window.partitionBy(*keys).orderBy("__hf")
-    ranked = (d.withColumn("__rn", F.row_number().over(w))
-               .where(F.col("__rn") <= k + 1).drop("__rn"))
-    return ranked.groupBy(*keys).applyInPandas(assemble, schema=out_schema)
+    return _pack_by_key(_theta_ranked(df, keys, cols, k, seed), keys,
+                        ["__hf"], pack)
 
 
 # --------------------------------------------------------------------------
@@ -828,8 +851,9 @@ def sample_grouped_build_jvm(df: DataFrame, keys, cols, payload_col,
     riding along: min(payload) per distinct (key, hash) collapses
     duplicates in CODEGEN with map-side partial aggregation, a per-key
     window rank keeps k+1 rows (WindowGroupLimit: per-partition top-k,
-    never a global sort), and `applyInPandas` only PACKS O(k) rows per
-    key — Python never sees the corpus.
+    never a global sort), and `_pack_by_key` only PACKS O(k) rows per
+    key, a whole Arrow batch of keys at a time — Python never sees the
+    corpus.
 
     Kernel-parity details: payloads are compared as unsigned bytes on
     both sides (Spark's binary/string ordering == python bytes ordering;
@@ -843,16 +867,10 @@ def sample_grouped_build_jvm(df: DataFrame, keys, cols, payload_col,
     cs = _cols(cols)
     hf = hash_col(cs, seed).bitwiseXOR(F.lit(_MIN64))  # unsigned-order key
     pc = F.coalesce(_cols([payload_col])[0].cast("binary"), F.lit(b""))
-    out_schema = ", ".join(
-        f"{kk} {df.schema[kk].dataType.simpleString()}" for kk in keys
-    ) + ", sketch binary"
 
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = _sample_pack(pdf["__hf"].to_numpy(dtype=np.int64),
-                          pdf["__pl"].to_numpy(dtype=object), k)
-        row = {kk: [pdf[kk].iloc[0]] for kk in keys}
-        row["sketch"] = [sk.to_bytes()]
-        return pd.DataFrame(row)
+    def pack(offsets, c):
+        for h, pl in _key_slices(offsets, c["__hf"], c["__pl"]):
+            yield _sample_pack(h, pl, k).to_bytes()
 
     d = (df.where(_notnull(cs))
            .groupBy(*keys, hf.alias("__hf"))
@@ -860,7 +878,7 @@ def sample_grouped_build_jvm(df: DataFrame, keys, cols, payload_col,
     w = Window.partitionBy(*keys).orderBy("__hf")
     ranked = (d.withColumn("__rn", F.row_number().over(w))
                .where(F.col("__rn") <= k + 1).drop("__rn"))
-    return ranked.groupBy(*keys).applyInPandas(assemble, schema=out_schema)
+    return _pack_by_key(ranked, keys, ["__hf", "__pl"], pack)
 
 
 def sample_build_jvm(df: DataFrame, cols, payload_col, k: int = 1024,
@@ -966,32 +984,26 @@ def wsample_grouped_build_jvm(df: DataFrame, keys, cols, weight_col,
     along): codegen dedup to canonical (key, hash, max-weight,
     min-payload) entries -> exponential rank as a codegen expression ->
     per-key window rank keeps k+1 rows (WindowGroupLimit: per-partition
-    top-k, never a global sort) -> `applyInPandas` packs O(k) rows per
-    key. Python never sees the corpus, and the only shuffle rows are
-    distinct (key, hash) pairs."""
+    top-k, never a global sort) -> `_pack_by_key` packs O(k) rows per
+    key, a whole Arrow batch of keys at a time. Python never sees the
+    corpus, and the only shuffle rows are distinct (key, hash) pairs."""
     from pyspark.sql import Window
     from .sketches.wsample import WeightedSampleSketch
     WeightedSampleSketch(k)  # validate k
     keys = [keys] if isinstance(keys, str) else list(keys)
     cs = _cols(cols)
-    out_schema = ", ".join(
-        f"{kk} {df.schema[kk].dataType.simpleString()}" for kk in keys
-    ) + ", sketch binary"
 
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = _wsample_pack(pdf["__hf"].to_numpy(dtype=np.int64),
-                           pdf["__w"].to_numpy(dtype=np.float64),
-                           pdf["__pl"].to_numpy(dtype=object), k)
-        row = {kk: [pdf[kk].iloc[0]] for kk in keys}
-        row["sketch"] = [sk.to_bytes()]
-        return pd.DataFrame(row)
+    def pack(offsets, c):
+        for h, wt, pl in _key_slices(offsets, c["__hf"], c["__w"],
+                                     c["__pl"]):
+            yield _wsample_pack(h, wt, pl, k).to_bytes()
 
     d = _wsample_dedup(df, keys, cs, weight_col, payload_col, seed)
     d = d.withColumn("__r", _wsample_rank_col(F.col("__hf"), F.col("__w")))
     w = Window.partitionBy(*keys).orderBy("__r", "__hf")
     ranked = (d.withColumn("__rn", F.row_number().over(w))
                .where(F.col("__rn") <= k + 1).drop("__rn", "__r"))
-    return ranked.groupBy(*keys).applyInPandas(assemble, schema=out_schema)
+    return _pack_by_key(ranked, keys, ["__hf", "__w", "__pl"], pack)
 
 
 def wsample_build_jvm(df: DataFrame, cols, weight_col, payload_col,
@@ -1034,17 +1046,6 @@ def _iblt_check_col(h: Column) -> Column:
     codegen expression (wire contract; sketches/iblt.py)."""
     from .sketches.iblt import CHECK_SALT
     return _splitmix64_col(h.bitwiseXOR(F.lit(_signed(CHECK_SALT))))
-
-
-def _iblt_scatter(proto, cells: np.ndarray, cnts: np.ndarray,
-                  kxs: np.ndarray, cxs: np.ndarray):
-    """Scatter aggregated (cell, count, key_xor, check_xor) rows into a
-    zero table of ``proto``'s geometry. XOR aggregates arrive as the
-    int64 bit patterns Spark's bit_xor produces; view them back."""
-    proto.counts[cells] = cnts
-    proto.key_xor[cells] = kxs.astype(np.int64).view(U64)
-    proto.check_xor[cells] = cxs.astype(np.int64).view(U64)
-    return proto
 
 
 def _iblt_updates(df: DataFrame, cs, num_hashes: int, sub: int,
@@ -1105,11 +1106,11 @@ def iblt_build_jvm(df: DataFrame, cols, max_diff: int | None = None,
         pdf = _iblt_updates(df, cs, proto.num_hashes, proto.sub, seed,
                             assume_distinct=assume_distinct).toPandas()
     if len(pdf):
-        _iblt_scatter(proto,
-                      pdf["cell"].to_numpy(dtype=np.int64),
-                      pdf["cnt"].to_numpy(dtype=np.int64),
-                      pdf["kx"].to_numpy(dtype=np.int64),
-                      pdf["cx"].to_numpy(dtype=np.int64))
+        # bit_xor aggregates arrive as int64 bit patterns; view them back
+        cell = pdf["cell"].to_numpy(dtype=np.int64)
+        proto.counts[cell] = pdf["cnt"].to_numpy(dtype=np.int64)
+        proto.key_xor[cell] = pdf["kx"].to_numpy(dtype=np.int64).view(U64)
+        proto.check_xor[cell] = pdf["cx"].to_numpy(dtype=np.int64).view(U64)
     return proto
 
 
@@ -1122,10 +1123,10 @@ def iblt_grouped_build_jvm(df: DataFrame, keys, cols,
     digest per key (e.g. per ingest day / per shard), byte-identical per
     key to the kernel build over that key's distinct hashes. Same
     topology as the global build with the group keys riding through the
-    codegen aggregation; `applyInPandas` only SCATTERS O(cells) rows per
-    key into the blob — Python never sees the corpus. Blobs subtract/
-    decode against any same-geometry build (kernel, global JVM, or
-    another grouped row)."""
+    codegen aggregation; `_pack_by_key` only SCATTERS O(cells) rows per
+    key, a whole Arrow batch of keys at a time — Python never sees the
+    corpus. Blobs subtract/decode against any same-geometry build
+    (kernel, global JVM, or another grouped row)."""
     from .sketches.iblt import IBLT
     if (max_diff is None) == (num_cells is None):
         raise ValueError("size with exactly one of max_diff= / num_cells=")
@@ -1133,25 +1134,19 @@ def iblt_grouped_build_jvm(df: DataFrame, keys, cols,
              else IBLT(num_cells, num_hashes))
     keys = [keys] if isinstance(keys, str) else list(keys)
     cs = _cols(cols)
-    out_schema = ", ".join(
-        f"{kk} {df.schema[kk].dataType.simpleString()}" for kk in keys
-    ) + ", sketch binary"
     m, k = proto.num_cells, proto.num_hashes
 
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = _iblt_scatter(IBLT(m, k),
-                           pdf["cell"].to_numpy(dtype=np.int64),
-                           pdf["cnt"].to_numpy(dtype=np.int64),
-                           pdf["kx"].to_numpy(dtype=np.int64),
-                           pdf["cx"].to_numpy(dtype=np.int64))
-        row = {kk: [pdf[kk].iloc[0]] for kk in keys}
-        row["sketch"] = [sk.to_bytes()]
-        return pd.DataFrame(row)
+    def pack(offsets, c):
+        for cnt, kx, cx in _dense_rows(
+                offsets, c["cell"],
+                [c["cnt"], c["kx"].view(U64), c["cx"].view(U64)], m):
+            sk = IBLT(m, k)
+            sk.counts, sk.key_xor, sk.check_xor = cnt, kx, cx
+            yield sk.to_bytes()
 
     with _wrap_arithmetic(df.sparkSession):
         updates = _iblt_updates(df, cs, k, proto.sub, seed, extra=keys)
-        out = updates.groupBy(*keys).applyInPandas(assemble,
-                                                   schema=out_schema)
+        out = _pack_by_key(updates, keys, ["cell", "cnt", "kx", "cx"], pack)
         # materialize inside the wrap window so the executed plan carries
         # the non-ANSI evaluation mode it was built with (same discipline
         # as bloom_grouped_build_jvm)
@@ -1230,20 +1225,28 @@ def mg_build_preagg(df: DataFrame, cols, k: int = 256,
               .orderBy(F.col("__c").desc(), F.col("__h").asc_nulls_first())
               .limit(k + 2)
               .collect())
-    sk = MisraGries(k=k)
     if not rows:
-        return sk
+        return MisraGries(k=k)
     assert rows[0]["__h"] is None, "rollup grand-total row must sort first"
-    sk.n = int(rows[0]["__c"])
-    top = [(r["__h"], int(r["__c"])) for r in rows[1:]]
-    t = top[k][1] if len(top) > k else 0
-    kept = [(h, c - t) for h, c in top[:k] if c - t > 0]
+    return _mg_pack(int(rows[0]["__c"]),
+                    np.array([r["__h"] for r in rows[1:]], dtype=np.int64),
+                    np.array([r["__c"] for r in rows[1:]], dtype=np.int64), k)
+
+
+def _mg_pack(n: int, hs: np.ndarray, ct: np.ndarray, k: int):
+    """One trim round over exact counts -> MisraGries: ``hs``/``ct`` are
+    the top k+1 (item hash, count) pairs in (count desc, hash asc) order
+    and ``n`` the total — shared by the grouped and global builds."""
+    from .sketches.mg import MisraGries
+    sk = MisraGries(k)
+    sk.n = n
+    t = int(ct[k]) if ct.size > k else 0  # the (k+1)-th largest count
+    kept = ct[:k] - t
+    pos = kept > 0
+    items, cnts = hs[:k].astype(np.int64).view(U64)[pos], kept[pos]
+    order = np.argsort(items)
+    sk.items, sk.counts = items[order], cnts[order]
     sk.dec = t
-    if kept:
-        items = np.array([h for h, _ in kept], dtype=np.int64).view(U64)
-        counts = np.array([c for _, c in kept], dtype=np.int64)
-        order = np.argsort(items)
-        sk.items, sk.counts = items[order], counts[order]
     return sk
 
 
@@ -1255,8 +1258,8 @@ def mg_grouped_build_preagg(df: DataFrame, keys, cols, k: int = 256,
     map-side-combined aggregation, a rank-filtered window that keeps only
     each key's top k+1 counts plus its total (WindowGroupLimit prunes to
     k+2 rows per key on both shuffle sides when k+2 <= the optimizer
-    threshold, default 1000), then one trim round in `applyInPandas` —
-    O(|keys| * k) rows ever reach Python, never n.
+    threshold, default 1000), then one trim round per key in
+    `_pack_by_key` — O(|keys| * k) rows ever reach Python, never n.
 
     Grouping levels: `groupingSets([keys+[item], keys])` computes the
     per-(key, item) counts AND the per-key total n in the same
@@ -1289,35 +1292,21 @@ def mg_grouped_build_preagg(df: DataFrame, keys, cols, k: int = 256,
         F.col("__g").desc(), F.col("__c").desc(), F.col("__h").asc())
     top = (counts.withColumn("__rn", F.row_number().over(w))
                  .where(F.col("__rn") <= k + 2)
-                 # the total row's __h is NULL; a null in an int64 column
-                 # turns the whole pandas column float64 (53-bit mantissa,
-                 # corrupting hashes), so fill it — assemble never reads
-                 # the total row's hash
+                 # the total row's __h is NULL; a null in an int64 Arrow
+                 # column comes out of to_numpy as float64 (53-bit
+                 # mantissa, corrupting hashes), so fill it — the packer
+                 # never reads the total row's hash
                  .withColumn("__h", F.coalesce(F.col("__h"), F.lit(0))))
-    out_schema = ", ".join(
-        f"{kk} {df.schema[kk].dataType.simpleString()}" for kk in keys
-    ) + ", sketch binary"
 
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("__rn")
-        sk = MisraGries(k)
-        assert int(pdf["__g"].iloc[0]) == 1, \
-            "per-key total row must rank first"
-        sk.n = int(pdf["__c"].iloc[0])
-        hs = pdf["__h"].iloc[1:].to_numpy(dtype=np.int64).view(U64)
-        ct = pdf["__c"].iloc[1:].to_numpy(dtype=np.int64)
-        t = int(ct[k]) if hs.size > k else 0  # the (k+1)-th largest count
-        kept = ct[:k] - t
-        pos = kept > 0
-        items, cnts = hs[:k][pos], kept[pos]
-        order = np.argsort(items)
-        sk.items, sk.counts = items[order], cnts[order]
-        sk.dec = t
-        row = {kk: [pdf[kk].iloc[0]] for kk in keys}
-        row["sketch"] = [sk.to_bytes()]
-        return pd.DataFrame(row)
+    def pack(offsets, c):
+        for rn, g, ct, hs in _key_slices(offsets, c["__rn"], c["__g"],
+                                         c["__c"], c["__h"]):
+            order = np.argsort(rn)
+            g, ct, hs = g[order], ct[order], hs[order]
+            assert g[0] == 1, "per-key total row must rank first"
+            yield _mg_pack(int(ct[0]), hs[1:], ct[1:], k).to_bytes()
 
-    out = top.groupBy(*keys).applyInPandas(assemble, schema=out_schema)
+    out = _pack_by_key(top, keys, ["__rn", "__g", "__c", "__h"], pack)
     # the rank<=literal -> WindowGroupLimit rewrite only fires up to the
     # optimizer threshold (default 1000): for larger k, raise it SCOPED —
     # pin the rewrite into this DataFrame's QueryExecution eagerly, then
@@ -1429,8 +1418,9 @@ def ddsketch_grouped_build_jvm(df: DataFrame, keys, col,
     analog of `ddsketch_build_jvm`, byte-identical per key to the kernel
     grouped build (agg.grouped_sketch_table with a DDSketch factory;
     tested). One codegen `groupBy(keys, sign, bucket).count()` with
-    map-side combine, then `applyInPandas` per key assembles histogram
-    rows into blobs: |keys| * occupied-buckets rows reach assembly —
+    map-side combine, then `_pack_by_key` assembles whole Arrow batches
+    of keys' histogram rows into blobs: |keys| * occupied-buckets rows
+    reach assembly —
     never n, at ANY per-key value cardinality (the structural advantage
     over quantile_grouped_build_preagg for continuous columns). The
     10^12-row path for per-day / per-tool latency-SLO tables that must
@@ -1438,21 +1428,13 @@ def ddsketch_grouped_build_jvm(df: DataFrame, keys, col,
     from .sketches.ddsketch import DDSketch
     proto = DDSketch(alpha, bucket_limit)
     keys = [keys] if isinstance(keys, str) else list(keys)
-    out_schema = ", ".join(
-        f"{k} {df.schema[k].dataType.simpleString()}" for k in keys
-    ) + ", sketch binary"
 
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = _ddsketch_assemble(alpha, bucket_limit,
-                                pdf["__s"].to_numpy(dtype=np.int64),
-                                pdf["__i"].to_numpy(dtype=np.int64),
-                                pdf["__n"].to_numpy(dtype=np.int64))
-        row = {k: [pdf[k].iloc[0]] for k in keys}
-        row["sketch"] = [sk.to_bytes()]
-        return pd.DataFrame(row)
+    def pack(offsets, c):
+        for s, i, n in _key_slices(offsets, c["__s"], c["__i"], c["__n"]):
+            yield _ddsketch_assemble(alpha, bucket_limit, s, i, n).to_bytes()
 
     src, sgn, idx = _ddsketch_cells(df, col, proto._log_gamma)
     cells = (src.select(*keys, sgn, idx)
                 .groupBy(*keys, "__s", "__i")
                 .agg(F.count(F.lit(1)).alias("__n")))
-    return cells.groupBy(*keys).applyInPandas(assemble, schema=out_schema)
+    return _pack_by_key(cells, keys, ["__s", "__i", "__n"], pack)

@@ -581,3 +581,63 @@ def test_iblt_build_jvm_assume_distinct_parity_and_pk_reconcile(spark,
                         assume_distinct=True)
     pos, neg, complete = fast.subtract(fb).decode()
     assert complete and neg.size == 0 and pos.size == 25
+
+
+def test_grouped_builds_pack_many_keys_byte_identical(spark):
+    """~3,100 composite (string, int) keys, a NULL key value and one hot
+    key: more keys than one p=16 dense scatter chunk holds, and a p=10
+    hot key dense on the wire beside sparse ones. Every packed blob
+    equals the kernel grouped build's and is unchanged under
+    repartition(7); an empty input gives an empty table, same schema."""
+    from bloomfilter_spark.agg import grouped_sketch_table
+    from bloomfilter_spark.jvm_build import (bloom_grouped_build_jvm,
+                                             cms_grouped_build_jvm,
+                                             hll_grouped_build_jvm)
+    from bloomfilter_spark.sketches import BloomFilter
+
+    bucket = F.col("id") % 1551
+    df = spark.range(24_000).select(
+        F.when(F.col("id") % 8 == 0, F.lit("hot"))
+         .when(bucket == 0, F.lit(None))
+         .otherwise(F.concat(F.lit("k"), bucket.cast("string"))).alias("s"),
+        (F.col("id") % 2).cast("int").alias("i"),
+        F.col("id").alias("v"))
+    keys = ["s", "i"]
+    builds = [
+        (lambda: HyperLogLog(10),
+         lambda d: hll_grouped_build_jvm(d, keys, "v", p=10)),
+        (lambda: HyperLogLog(16),
+         lambda d: hll_grouped_build_jvm(d, keys, "v", p=16)),
+        (lambda: CountMinSketch(width=64, depth=2),
+         lambda d: cms_grouped_build_jvm(d, keys, "v", width=64, depth=2)),
+        (lambda: BloomFilter(1 << 14, 4),
+         lambda d: bloom_grouped_build_jvm(d, keys, "v", m=1 << 14, k=4)),
+    ]
+
+    def table(t):
+        return {(r["s"], r["i"]): bytes(r["sketch"]) for r in t.collect()}
+
+    modes = set()
+    for factory, build in builds:
+        jvm = build(df)
+        got = table(jvm)
+        assert len(got) > 3000 and ("hot", 0) in got and (None, 1) in got
+        assert got == table(grouped_sketch_table(df, keys, ["v"], factory))
+        assert got == table(build(df.repartition(7)))
+        empty = build(df.where(F.lit(False)))
+        assert empty.collect() == [] and empty.schema == jvm.schema
+        if isinstance(factory(), HyperLogLog):
+            for blob in got.values():
+                sk = HyperLogLog.from_bytes(blob)
+                modes.add(5 * np.count_nonzero(sk.registers) >= sk.m)
+    assert modes == {True, False}  # dense and sparse HLL payloads both ran
+
+
+def test_jvm_build_packs_grouped_tables_in_one_arrow_pass():
+    """Structural guard: every grouped builder packs through the one
+    mapInArrow helper, none through a per-key grouped-map call."""
+    import bloomfilter_spark.jvm_build as jb
+    with open(jb.__file__) as f:
+        src = f.read()
+    assert "applyInPandas(" not in src
+    assert src.count("mapInArrow(") == 1

@@ -1,7 +1,9 @@
 """Physical-plan red-flag sweep over every queries() entry: builds each
 query's DataFrame at the given sf_dir and greps its executed plan for the
 operators that do not survive a 100x scale-up — CartesianProduct and
-BroadcastNestedLoopJoin — plus an Exchange (shuffle) count for context.
+BroadcastNestedLoopJoin — plus, for context, an Exchange (shuffle) count
+and a FlatMapGroupsInPandas count: the grouped-map nodes that still pay a
+Python call per key (not a red flag; it shows where that cost remains).
 
 Queries that RUN work eagerly when called (streaming availableNow sinks,
 driver-side sketch builds) still only pay their normal cost; the plan
@@ -42,8 +44,10 @@ def main(sf_dir: str, only: list[str] | None = None) -> int:
             continue
         hits = [r for r in RED if r in plan]
         n_ex = plan.count("Exchange")
+        n_fg = plan.count("FlatMapGroupsInPandas")
         mark = " <-- RED" if hits else ""
-        print(f"{name}: exchanges={n_ex} {','.join(hits) or '-'}{mark}")
+        print(f"{name}: exchanges={n_ex} flatmap_groups_in_pandas={n_fg} "
+              f"{','.join(hits) or '-'}{mark}")
         if hits:
             flagged.append((name, hits))
     print(f"\nflagged: {flagged or 'none'}")
